@@ -13,6 +13,7 @@ decimal in both to make the hash robust to summation-order ULPs.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -81,3 +82,31 @@ def all_queries() -> dict[str, QueryDef]:
     )
 
     return REGISTRY
+
+
+_JOB_GROUP_KEYS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
+
+
+def build_counting_jobs(
+    qdef: QueryDef, spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
+    """Build ``qdef``'s DataFrame and count the Spark jobs that ran
+    while building it (schema inference, eager pins, collects,
+    manifest commits).  The build runs under its own job group; the
+    caller's job group is restored afterwards."""
+    sc = spark.sparkContext
+    group = f"build:{qdef.name}:{uuid.uuid4().hex}"
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
+    sc.setJobGroup(group, group)
+    try:
+        df = qdef.fn(spark, sf_dir)
+    finally:
+        for key, value in zip(_JOB_GROUP_KEYS, saved):
+            sc.setLocalProperty(key, value)
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))

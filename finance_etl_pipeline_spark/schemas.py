@@ -18,6 +18,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -122,7 +123,9 @@ DQ_EXCEPTIONS = _st(
 )
 
 # ---------------------------------------------------------------------------
-# Driver testdata tables (/root/testdata/sf*/ — FIXTURES.md §B)
+# Testdata tables (FIXTURES.md §B).  Declared exactly as the parquet
+# files store them (timestamps are TIMESTAMP_NTZ), because sources/readers.py
+# reads every one of them with this schema instead of inferring it.
 # ---------------------------------------------------------------------------
 
 REGION = _st([("r_regionkey", IntegerType(), True), ("r_name", StringType(), True)])
@@ -171,7 +174,7 @@ ORDERS = _st(
         ("o_custkey", LongType(), True),
         ("o_orderstatus", StringType(), True),
         ("o_totalprice", DoubleType(), True),
-        ("o_orderdate", TimestampType(), True),
+        ("o_orderdate", TimestampNTZType(), True),
         ("o_orderpriority", StringType(), True),
     ]
 )
@@ -188,14 +191,14 @@ LINEITEM = _st(
         ("l_tax", DoubleType(), True),
         ("l_returnflag", StringType(), True),
         ("l_linestatus", StringType(), True),
-        ("l_shipdate", TimestampType(), True),
+        ("l_shipdate", TimestampNTZType(), True),
     ]
 )
 
 EVENTS = _st(
     [
         ("event_id", LongType(), True),
-        ("ts", TimestampType(), True),
+        ("ts", TimestampNTZType(), True),
         ("user_id", LongType(), True),
         ("event_type", StringType(), True),
         ("value", DoubleType(), True),

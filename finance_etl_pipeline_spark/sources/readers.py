@@ -6,17 +6,26 @@ Reference behavior replicated:
   path is missing (reference scripts/export_bi_datasets.py:11-12) —
   downstream month-filters and joins then no-op instead of crashing.
 
-Scale notes: explicit schemas avoid the inference scan; PERMISSIVE mode
-with a ``_corrupt_record`` column keeps bad rows visible to the DQ
-layer instead of silently dropping them.
+Scale notes: explicit schemas avoid the inference job, a Spark job
+that opens file footers before any query runs (a listing-sized scan at
+100 TB).  ``table()`` reads each testdata table with its
+``schemas.TESTDATA`` declaration, so building a plan on those tables
+starts no Spark job at all.  The one choice that depends on the files,
+whether ``events.ts`` holds nanoseconds, is made from one parquet footer
+read with pyarrow.  PERMISSIVE CSV mode with a ``_corrupt_record``
+column keeps bad rows visible to the DQ layer instead of silently
+dropping them.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from finance_etl_pipeline_spark import schemas
 
@@ -53,53 +62,68 @@ def read_parquet(
 
 # the driver testdata catalog (TESTDATA.md) — what `cli.py sql`
 # registers as temp views
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
+TABLES = tuple(schemas.TESTDATA)
+
+# events as a TIMESTAMP(NANOS) file reads under the nanosAsLong conf
+_EVENTS_NANOS = StructType(
+    [
+        StructField("ts", LongType()) if f.name == "ts" else f
+        for f in schemas.EVENTS.fields
+    ]
 )
 
 
+def _ts_is_nanos(path: str) -> bool:
+    """Whether ``events.ts`` at ``path`` is INT64 TIMESTAMP(NANOS).
+
+    Reads one parquet footer with pyarrow, so it starts no Spark job.
+    INT96 timestamps (Spark's default output type) are coerced to
+    micros here so they are not mistaken for nanos: Spark reads them
+    through the declared TIMESTAMP_NTZ.  A directory is judged by its
+    first data file; a missing or empty path takes the declared branch
+    and fails or reads empty in Spark as usual.
+    """
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    if not files:
+        return False
+    with pq.ParquetFile(files[0], coerce_int96_timestamp_unit="us") as pf:
+        return pf.schema_arrow.field("ts").type.unit == "ns"
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (FIXTURES.md §B).
+    """Load one testdata table (FIXTURES.md §B) with its declared
+    ``schemas.TESTDATA`` schema, so building the DataFrame starts no
+    Spark job.  ``name`` must be a ``TESTDATA`` key (``KeyError``
+    otherwise).
 
     ``events.ts`` may be stored as parquet TIMESTAMP(NANOS), which
-    Spark 4 refuses to read natively.  When it is, we read it as a
-    nanosecond long via the ``nanosAsLong`` legacy conf and truncate to
-    microseconds with exact integer division (``div``, not ``/``:
+    Spark 4 refuses to read as a timestamp.  The parquet footer decides
+    (``_ts_is_nanos``).  On that branch only, ``ts`` is read as a
+    nanosecond long under the ``nanosAsLong`` legacy conf and truncated
+    to microseconds with exact integer division (``div``, not ``/``:
     ns-epoch values exceed the 53-bit double mantissa, so float
     division would corrupt them).  DuckDB performs the same ns→us
-    truncation, keeping the oracle in bit-parity.  Testdata generated
-    with micro-second timestamps reads natively (as TIMESTAMP_NTZ) and
-    is cast to the session-zone TIMESTAMP type — an identity on the
-    underlying micros under the engine's fixed UTC session zone
-    (session.py), and the type every downstream consumer
-    (``unix_micros``, watermarks, the streaming twins) expects.  The
-    branch inspects the actual read type, not the table name.
+    truncation, keeping the oracle in bit-parity.  Otherwise ``ts``
+    reads as the declared TIMESTAMP_NTZ and is cast to the
+    session-zone TIMESTAMP — an identity on the underlying micros under
+    the engine's fixed UTC session zone (session.py), and the type
+    every downstream consumer (``unix_micros``, watermarks, the
+    streaming twins) expects.
     """
+    schema = schemas.TESTDATA[name]
     path = os.path.join(sf_dir, f"{name}.parquet")
+    ts = None
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(ts_type, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+        if _ts_is_nanos(path):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            schema, ts = _EVENTS_NANOS, F.timestamp_micros(F.expr("ts div 1000"))
+        else:
+            ts = F.col("ts").cast("timestamp")
+    df = spark.read.schema(schema).parquet(path)
+    return df if ts is None else df.withColumn("ts", ts)
 
 
 def read_json(

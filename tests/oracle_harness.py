@@ -13,6 +13,8 @@ import os
 
 import duckdb
 
+from finance_etl_pipeline_spark.plans import build_counting_jobs
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -102,8 +104,16 @@ def _spark_kinds(sdf) -> dict:
 
 
 def compare(spark, qdef, sf_dir: str) -> dict:
-    """Returns {'name', 'ok', 'detail'} for one QueryDef."""
-    sdf = qdef.fn(spark, sf_dir)
+    """Returns {'name', 'ok', 'detail', 'build_jobs'} for one QueryDef;
+    ``build_jobs`` counts the Spark jobs run while ``qdef.fn`` built
+    the DataFrame."""
+    sdf, build_jobs = build_counting_jobs(qdef, spark, sf_dir)
+    out = _compare(sdf, qdef, sf_dir)
+    out["build_jobs"] = build_jobs
+    return out
+
+
+def _compare(sdf, qdef, sf_dir: str) -> dict:
     s_cols = list(sdf.columns)
     s_rows = [tuple(r) for r in sdf.collect()]
     if qdef.oracle is None:

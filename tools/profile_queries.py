@@ -11,9 +11,12 @@ Usage:
         [--out /tmp/profile.json] [--plans-dir /tmp/plans] \
         [--only name1,name2,...]
 
-Writes one JSON map {name: {sec, exchanges, joins, python_nodes,
-rows}} and, when --plans-dir is given, one <name>.txt per query with
-the formatted plan.
+Writes one JSON map {name: {sec, build_s, build_jobs, exchanges,
+joins, python_nodes, rows}} and, when --plans-dir is given, one
+<name>.txt per query with the formatted plan.  ``build_s`` and
+``build_jobs`` are the wall time and the Spark jobs (counted by job
+group) of the query's first ``fn`` call, which builds the DataFrame;
+``sec`` includes a build too.
 """
 
 from __future__ import annotations
@@ -66,7 +69,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from finance_etl_pipeline_spark.plans import all_queries
+    from finance_etl_pipeline_spark.plans import all_queries, build_counting_jobs
     from finance_etl_pipeline_spark.session import get_spark
 
     SparkSession.getActiveSession() and SparkSession.getActiveSession().stop()
@@ -98,7 +101,9 @@ def main() -> int:
         qdef = registry[name]
         rec: dict = {}
         try:
-            df = qdef.fn(spark, args.sf_dir)
+            t0 = time.perf_counter()
+            df, rec["build_jobs"] = build_counting_jobs(qdef, spark, args.sf_dir)
+            rec["build_s"] = round(time.perf_counter() - t0, 4)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
