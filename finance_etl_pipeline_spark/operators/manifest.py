@@ -2766,6 +2766,18 @@ def delete_where(table_dir: str, where: list[tuple]) -> int:
     return _publish(table_dir, build)
 
 
+def _shared_layout(m: dict, dirs) -> list[str] | None:
+    """The hive partition columns (PHYSICAL names) that EVERY one of
+    ``dirs`` is partitioned by — the layout a rewrite of their rows
+    keeps; None when ``dirs`` is empty, any of them is unpartitioned,
+    or their layouts differ."""
+    part_dirs = m.get("partitioned_dirs", {})
+    layouts = {tuple(part_dirs.get(d, ())) for d in dirs}
+    if len(layouts) != 1:
+        return None
+    return list(layouts.pop()) or None
+
+
 def update_where(
     spark: SparkSession,
     table_dir: str,
@@ -2790,7 +2802,15 @@ def update_where(
     Cost ∝ |matching rows| (stats-pruned read + one write), never the
     table.  Completes the DML triad: INSERT = ``commit(append)``,
     DELETE = ``delete_where``, UPDATE = here; MERGE = the changefeed
-    sink."""
+    sink.
+
+    Partition preservation: when EVERY dir of the base snapshot is
+    hive-partitioned by the same columns, the rewritten dir keeps that
+    layout (``partitionBy`` on the write, recorded in the manifest's
+    ``partitioned_dirs``) — an update must not silently destroy the
+    partition pruning a table was designed around, nor the file
+    alignment ``compact_where`` proves partition predicates against.
+    Otherwise the rewrite is unpartitioned."""
     preds = [_normalize_pred(p) for p in where]
     if not preds:
         raise ValueError("update_where requires at least one predicate")
@@ -2798,9 +2818,9 @@ def update_where(
         raise ValueError("update_where requires at least one SET column")
 
     base_version = latest_version(table_dir)
-    base_mapping, _ = _load_mapping(
-        _read_manifest(table_dir, base_version) if base_version else None
-    )
+    m_base = _read_manifest(table_dir, base_version) if base_version else None
+    base_mapping, _ = _load_mapping(m_base)
+    shared = _shared_layout(m_base, m_base["dirs"]) if m_base else None
     stored = [
         [c, o, _store_value(o, v)]
         for c, o, v in _phys_preds(base_mapping, preds)
@@ -2823,7 +2843,10 @@ def update_where(
     rel = os.path.join(_DATA, f"commit-{token}")
     abs_dir = os.path.join(table_dir, rel)
     # the rewritten dir stores PHYSICAL names like every data dir
-    _to_physical_df(updated, base_mapping).write.parquet(abs_dir)
+    writer = _to_physical_df(updated, base_mapping).write
+    if shared:
+        writer = writer.partitionBy(*shared)
+    writer.parquet(abs_dir)
     file_entries = _harvest_stats(abs_dir, spark)
     schema_json = _physical_schema(updated.schema, base_mapping).jsonValue()
 
@@ -2870,6 +2893,9 @@ def update_where(
         dirs.append(rel)
         files[rel] = file_entries
         dir_schemas[rel] = schema_json
+        part_dirs = dict(m.get("partitioned_dirs", {}))
+        if shared:
+            part_dirs[rel] = list(shared)
         # mode='update', NOT 'append': the version both appends a dir
         # AND tombstones rows, so an append-only consumer (the
         # lakestream source) must reject it loudly — publishing it as
@@ -2888,7 +2914,7 @@ def update_where(
             "mode": "update",
             "files": files,
             "dir_schemas": dir_schemas,
-            "partitioned_dirs": dict(m.get("partitioned_dirs", {})),
+            "partitioned_dirs": part_dirs,
             "deletes": deletes,
             "schema": m["schema"],
             "constraints": cons,
@@ -4475,16 +4501,7 @@ def compact_table(
     on_disk = sum(os.path.getsize(f) for f in files_for_version(table_dir, v))
     n_files = max(1, -(-on_disk // tgt))
     m = _read_manifest(table_dir, v)
-    part_dirs = m.get("partitioned_dirs", {})
-    shared = (
-        part_dirs.get(m["dirs"][0])
-        if m["dirs"] and all(d in part_dirs for d in m["dirs"])
-        else None
-    )
-    if shared is not None and any(
-        part_dirs[d] != shared for d in m["dirs"]
-    ):
-        shared = None  # mixed layouts: compact to unpartitioned
+    shared = _shared_layout(m, m["dirs"])  # mixed: unpartitioned
     if shared is not None:
         # partitioned_dirs record PHYSICAL column names; the rewrite
         # operates on the logical frame (and, being an overwrite,
@@ -4639,12 +4656,7 @@ def compact_where(
 
     # the matched files' live rows — tombstones applied, logical names
     df = read_version(spark, table_dir, base, where=where)
-    part_dirs0 = m0.get("partitioned_dirs", {})
-    shared = None
-    if all(d in part_dirs0 for d in replaced):
-        layouts = {tuple(part_dirs0[d]) for d in replaced}
-        if len(layouts) == 1:
-            shared = list(layouts.pop())  # physical names
+    shared = _shared_layout(m0, replaced)  # physical names
     if zorder_cols:
         df = zorder_by(df, zorder_cols, num_partitions=n_files)
         out_partition_by = None

@@ -18,15 +18,22 @@ from finance_etl_pipeline_spark.sources.lakestream import (
 
 def _mk_versions(spark, tbl, n_versions, files_per_version, start=0):
     """Each version appends exactly ``files_per_version`` files of one
-    row each (round-robin repartition of k rows into k partitions), so
-    a micro-batch's ROW count equals its FILE count."""
+    row each, so a micro-batch's ROW count equals its FILE count.
+
+    The k rows are ``parallelize``d into k slices: slicing a local list
+    is positional, one row per slice, and each slice is written as one
+    file at every ``local[N]``.  ``repartition(k)`` does not give this
+    layout: Spark's round-robin repartition starts each input
+    partition at a random target, so k rows land in fewer than k
+    files (some holding several rows, some empty) in a pattern that
+    depends on ``defaultParallelism``."""
     for v in range(n_versions):
         base = start + v * files_per_version
-        df = spark.createDataFrame(
+        rows = spark.sparkContext.parallelize(
             [(base + i, f"v{v}") for i in range(files_per_version)],
-            "id int, tag string",
-        ).repartition(files_per_version)
-        M.commit(df, tbl)
+            files_per_version,
+        )
+        M.commit(spark.createDataFrame(rows, "id int, tag string"), tbl)
 
 
 def _run_capped(
@@ -81,8 +88,8 @@ def _distinct_ids(seen):
 
 def _id_to_file(tbl):
     """id -> containing file, read from the manifest + parquet files
-    (repartition may leave empty partitions unwritten, so ROW counts
-    per batch are not FILE counts — this map recovers the truth)."""
+    (the caps count FILES, so batches are checked through the files
+    their rows came from, not through their row counts)."""
     import os
 
     import pyarrow.parquet as pq
@@ -105,9 +112,8 @@ def _files_per_batch(seen, id_file):
 
 
 def _total_files(tbl, after_version=0):
-    """ALL files (including 0-row files, which tiny repartitioned
-    writes produce and which admission still counts) appended by
-    versions > after_version."""
+    """ALL files (including any 0-row files, which admission still
+    counts) appended by versions > after_version."""
     tip = M.latest_version(tbl)
     n = 0
     prev_dirs = set()
@@ -133,8 +139,8 @@ def test_max_files_per_trigger_bounds_every_batch(spark, tmp_path):
     fpb = _files_per_batch(seen, _id_to_file(tbl))
     assert fpb, "no data drained"
     assert max(fpb.values()) <= 3, f"a batch exceeded the file cap: {fpb}"
-    # the cap splits versions mid-way: every admitted file (including
-    # 0-row files tiny writes produce) costs cap budget
+    # the cap splits versions mid-way: every admitted file costs cap
+    # budget
     n_total = _total_files(tbl)
     n_batches = len({b for b, n in batches})
     assert n_batches >= -(-n_total // 3), (n_total, batches)
@@ -198,6 +204,11 @@ def test_mid_version_offset_survives_restart(spark, tmp_path):
     tbl, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ck")
     # one big version: 10 files; cap 3 => offsets must split it
     _mk_versions(spark, tbl, n_versions=1, files_per_version=10)
+    # precondition: 10 distinct one-row files, so the crash after two
+    # capped batches (<= 6 files) leaves the version partly consumed
+    id_file = _id_to_file(tbl)
+    assert sorted(id_file) == list(range(10))
+    assert len(set(id_file.values())) == 10, id_file
 
     batches, seen = [], set()
     _run_capped(
@@ -215,7 +226,6 @@ def test_mid_version_offset_survives_restart(spark, tmp_path):
     _run_capped(
         spark, tbl, ckpt, batches2, seen2, {"max_files_per_trigger": "3"}
     )
-    id_file = _id_to_file(tbl)
     fpb = _files_per_batch(seen2, id_file)
     assert not fpb or max(fpb.values()) <= 3, fpb
     # union covers everything; overlap only from the engine replaying

@@ -597,6 +597,72 @@ def test_update_where_conflict_aborts(spark, sf_dir, tmp_path):
     assert M.read_version(spark, t).filter(F.col("o_totalprice") == 0.0).count() == 0
 
 
+def _bucket_rows(n=40):
+    return [(i, i % 4, float(i)) for i in range(n)]
+
+
+def test_update_where_keeps_shared_hive_layout(spark, tmp_path):
+    """An UPDATE of a table whose dirs all share a hive layout writes
+    its rewritten dir under that layout: the manifest records it,
+    every rewritten file holds one partition (exact min == max stats),
+    so a scoped ``compact_where`` on the partition column stays
+    provably file-aligned.  The SET re-buckets rows (bucket = id % 3),
+    so rows read from one source file span several buckets and an
+    unpartitioned rewrite would mix them at any parallelism."""
+    t = str(tmp_path / "tbl")
+    # two slices: every bucket's rows are spread over two write tasks
+    rows = spark.sparkContext.parallelize(_bucket_rows(), 2)
+    M.commit(
+        spark.createDataFrame(rows, "id int, bucket int, val double"),
+        t,
+        partition_by=["bucket"],
+    )
+    v = M.update_where(
+        spark,
+        t,
+        [("bucket", "<=", 1)],
+        {"val": -F.col("val"), "bucket": F.col("id") % 3},
+    )
+    m = M._read_manifest(t, v)
+    (rel,) = [d for d in m["dirs"] if d not in M._read_manifest(t, 1)["dirs"]]
+    assert m["partitioned_dirs"][rel] == ["bucket"]
+    entries = M._load_files(t, m)[rel]
+    assert entries
+    for e in entries:
+        st = e["stats"]["bucket"]
+        assert st["min"] == st["max"], e
+
+    M.compact_where(spark, t, [("bucket", "==", 2)])
+    want = sorted(
+        (i, i % 3, -val) if b <= 1 else (i, b, val)
+        for i, b, val in _bucket_rows()
+    )
+    got = sorted(
+        (r.id, r.bucket, r.val)
+        for r in M.read_version(spark, t).select("id", "bucket", "val").collect()
+    )
+    assert got == want
+
+
+def test_update_where_without_shared_layout_stays_unpartitioned(
+    spark, tmp_path
+):
+    """A table mixing a plain and a hive-partitioned dir has no shared
+    layout to keep: the rewritten dir is unpartitioned, as before."""
+    t = str(tmp_path / "tbl")
+    df = spark.createDataFrame(_bucket_rows(), "id int, bucket int, val double")
+    M.commit(df.filter(F.col("id") < 20), t)
+    M.commit(df.filter(F.col("id") >= 20), t, partition_by=["bucket"])
+    v = M.update_where(spark, t, [("bucket", "==", 1)], {"val": F.lit(0.0)})
+    m = M._read_manifest(t, v)
+    assert m["dirs"][-1] not in m["partitioned_dirs"]
+    got = sorted(tuple(r) for r in M.read_version(spark, t).collect())
+    want = sorted(
+        (i, b, 0.0 if b == 1 else val) for i, b, val in _bucket_rows()
+    )
+    assert got == want
+
+
 def test_column_bounds_metadata_minmax(spark, sf_dir, tmp_path):
     """MIN/MAX answered from the manifest, exact vs the scan; honest
     None when tombstones could have removed the extreme row."""

@@ -70,7 +70,12 @@ BUILD_JOBS_ALLOWED: dict[str, tuple[int, str]] = {
     "manifest_clone_cow_read": (16, _COMMITS),
     "manifest_compact_where_read": (4, _COMMITS),
     "manifest_compacted_read": (9, _COMMITS),
-    "manifest_conflict_rebase_rewrites": (7, _COMMITS),
+    "manifest_conflict_rebase_rewrites": (
+        9,
+        _COMMITS + "; 2 repartitioned commits x 2 jobs (shuffle map, "
+        "write) + 1 update_where write + 2 partition-preserving "
+        "compact_where x 2 jobs (shuffle map, write)",
+    ),
     "manifest_constraint_gate_read": (6, _COMMITS),
     "manifest_convert_parquet": (2, _COMMITS),
     "manifest_copy_into_idempotent": (8, _COMMITS),
